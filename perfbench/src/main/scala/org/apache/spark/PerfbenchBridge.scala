@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Access to the driver's listener bus, which Spark keeps package-private. */
+object PerfbenchBridge {
+
+  /** Block until every event posted so far has reached every listener. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
