@@ -45,7 +45,7 @@ final class SparkCache(
   private def metaTableExists(name: String): Boolean =
     spark.catalog.tableExists(s"`$database`.`$name`")
 
-  private def metaTable(name: String, schema: StructType): Unit = {
+  private def metaTable(name: String, schema: StructType): Unit = metaLock.synchronized {
     if (!metaTableExists(name)) {
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -53,6 +53,13 @@ final class SparkCache(
         .saveAsTable(s"`$database`.`$name`")
     }
   }
+
+  // A sync finalizes its streams on several threads (graft.sources.
+  // StreamPool). Writes to DIFFERENT stream tables run unserialized;
+  // what they share goes through this lock: the metadata tables'
+  // create-if-absent, their appends (two concurrent file commits into
+  // one table path are unsafe) and the memos below.
+  private val metaLock = new Object
 
   private val streamsSchema = StructType(Seq(
     StructField("source_name", StringType),
@@ -151,9 +158,12 @@ final class SparkCache(
           // change results (both dedup plans are output-identical,
           // WriteStrategySpec-pinned) and rarely changes verdict
           // within a session
-          val skewed = skewProbed.getOrElseUpdate(t,
-            WriteStrategies.probeSkew(
-              existing.unionByName(batch, allowMissingColumns = true), pks))
+          val skewed = metaLock.synchronized(skewProbed.get(t)).getOrElse {
+            val v = WriteStrategies.probeSkew(
+              existing.unionByName(batch, allowMissingColumns = true), pks)
+            metaLock.synchronized(skewProbed(t) = v)
+            v
+          }
           stageAndSwap(
             WriteStrategies.merge(Some(existing), batch, pks, Some(skewed)), t)
         }
@@ -189,11 +199,42 @@ final class SparkCache(
     // list in creation order
     val stamp = graft.names.Ulid.randomSuffix()
     val tmpName = s"__merge_tmp_$stamp"
-    val oldName = s"__merge_old_$stamp"
     result.write.saveAsTable(s"`$database`.`$tmpName`")
-    spark.sql(s"ALTER TABLE $t RENAME TO `$database`.`$oldName`")
-    spark.sql(s"ALTER TABLE `$database`.`$tmpName` RENAME TO $t")
-    spark.sql(s"DROP TABLE IF EXISTS `$database`.`$oldName`")
+    swapIn(t, tmpName, s"__merge_old_$stamp", partitioned = false)
+  }
+
+  /** Swap the staged table `tmpName` in under `t` by two metadata-only
+    * renames, then drop the old data. Rollback-safe: if `t` can't be
+    * moved aside, the stage is dropped; if the stage can't take the
+    * name, the original is restored under it and the stage dropped —
+    * a failed swap leaves the before-state and no `__*` leftover.
+    *
+    * Partition metadata stores ABSOLUTE directory paths and a table
+    * rename does not rewrite them — so after each rename a partitioned
+    * table is re-synced from its new directory (metadata-only
+    * listing), or the final DROP would purge the paths its stale
+    * metadata still points at: the *new* table's data. */
+  private def swapIn(t: String, tmpName: String, oldName: String, partitioned: Boolean): Unit = {
+    val tmp = s"`$database`.`$tmpName`"
+    val old = s"`$database`.`$oldName`"
+    def repair(name: String): Unit =
+      if (partitioned) spark.sql(s"MSCK REPAIR TABLE $name SYNC PARTITIONS")
+    try spark.sql(s"ALTER TABLE $t RENAME TO $old")
+    catch {
+      case e: Throwable =>
+        spark.sql(s"DROP TABLE IF EXISTS $tmp"); throw e
+    }
+    repair(old)
+    try spark.sql(s"ALTER TABLE $tmp RENAME TO $t")
+    catch {
+      case e: Throwable => // restore the original under its name
+        spark.sql(s"ALTER TABLE $old RENAME TO $t")
+        repair(t)
+        spark.sql(s"DROP TABLE IF EXISTS $tmp")
+        throw e
+    }
+    repair(t)
+    spark.sql(s"DROP TABLE IF EXISTS $old")
   }
 
   // Merge skew-probe verdict per table (round 17): a PLAN-choice memo,
@@ -214,31 +255,34 @@ final class SparkCache(
     * each — for the 22-stream smoke gauntlet that was half the sync
     * wall); callers that know the selection up front register it in
     * bulk and the per-stream path becomes a memoized no-op. */
-  def preRegisterStreams(streamNames: Seq[String], sourceName: String = "default"): Unit = {
-    import spark.implicits._
-    val fresh = streamNames.filterNot(s => registered((sourceName, s)))
-    if (fresh.isEmpty) return
-    metaTable(StreamsTable, streamsSchema)
-    val rows = fresh.map(s => (sourceName, s, tableName(s), "{}"))
-      .toDF("source_name", "stream_name", "table_name", "catalog_json")
-      .withColumn("registered_at", current_timestamp())
-    rows.write.mode(SaveMode.Append).saveAsTable(s"`$database`.`$StreamsTable`")
-    fresh.foreach(s => registered.add((sourceName, s)))
-  }
+  def preRegisterStreams(streamNames: Seq[String], sourceName: String = "default"): Unit =
+    metaLock.synchronized {
+      import spark.implicits._
+      val fresh = streamNames.filterNot(s => registered((sourceName, s)))
+      if (fresh.nonEmpty) {
+        metaTable(StreamsTable, streamsSchema)
+        val rows = fresh.map(s => (sourceName, s, tableName(s), "{}"))
+          .toDF("source_name", "stream_name", "table_name", "catalog_json")
+          .withColumn("registered_at", current_timestamp())
+        rows.write.mode(SaveMode.Append).saveAsTable(s"`$database`.`$StreamsTable`")
+        fresh.foreach(s => registered.add((sourceName, s)))
+      }
+    }
 
   // ------------------------------------------------------------------
   // State backend (reference _state_backend.py; last-write-wins per
   // (source, stream); SURVEY ST2/ST3)
   // ------------------------------------------------------------------
 
-  def writeState(sourceName: String, streamName: String, stateJson: String): Unit = {
-    import spark.implicits._
-    metaTable(StateTable, stateSchema)
-    Seq((sourceName, streamName, stateJson))
-      .toDF("source_name", "stream_name", "state_json")
-      .withColumn("updated_at", current_timestamp())
-      .write.mode(SaveMode.Append).saveAsTable(s"`$database`.`$StateTable`")
-  }
+  def writeState(sourceName: String, streamName: String, stateJson: String): Unit =
+    metaLock.synchronized {
+      import spark.implicits._
+      metaTable(StateTable, stateSchema)
+      Seq((sourceName, streamName, stateJson))
+        .toDF("source_name", "stream_name", "state_json")
+        .withColumn("updated_at", current_timestamp())
+        .write.mode(SaveMode.Append).saveAsTable(s"`$database`.`$StateTable`")
+    }
 
   /** Latest state per stream for a source (last-write-wins). */
   def latestState(sourceName: String, streamName: String): Option[String] = {
@@ -359,36 +403,12 @@ final class SparkCache(
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     val stamp = graft.names.Ulid.randomSuffix()
     val tmpName = s"__compact_tmp_$stamp"
-    val oldName = s"__compact_old_$stamp"
     val writer =
       if (partCols.isEmpty) df.repartition(nFiles).write
       else df.repartition(partCols.map(org.apache.spark.sql.functions.col): _*)
         .write.partitionBy(partCols: _*)
     writer.saveAsTable(s"`$database`.`$tmpName`")
-    // Partition metadata stores ABSOLUTE directory paths and a table
-    // rename does not rewrite them — so after each rename the moved
-    // table must be re-synced from its new directory (metadata-only
-    // listing), or a later DROP would purge the paths its stale
-    // metadata still points at: the *new* table's data.
-    def repair(name: String): Unit =
-      if (partCols.nonEmpty)
-        spark.sql(s"MSCK REPAIR TABLE `$database`.`$name` SYNC PARTITIONS")
-    try spark.sql(s"ALTER TABLE $t RENAME TO `$database`.`$oldName`")
-    catch {
-      case e: Throwable =>
-        spark.sql(s"DROP TABLE IF EXISTS `$database`.`$tmpName`"); throw e
-    }
-    repair(oldName)
-    try spark.sql(s"ALTER TABLE `$database`.`$tmpName` RENAME TO $t")
-    catch {
-      case e: Throwable => // restore the original under its name
-        spark.sql(s"ALTER TABLE `$database`.`$oldName` RENAME TO $t")
-        if (partCols.nonEmpty) spark.sql(s"MSCK REPAIR TABLE $t SYNC PARTITIONS")
-        spark.sql(s"DROP TABLE IF EXISTS `$database`.`$tmpName`")
-        throw e
-    }
-    if (partCols.nonEmpty) spark.sql(s"MSCK REPAIR TABLE $t SYNC PARTITIONS")
-    spark.sql(s"DROP TABLE IF EXISTS `$database`.`$oldName`")
+    swapIn(t, tmpName, s"__compact_old_$stamp", partitioned = partCols.nonEmpty)
     spark.catalog.refreshTable(t)
     spark.table(t).inputFiles.length
   }

@@ -167,26 +167,15 @@ final class SmokeTestSource(
       forceFullRefresh: Boolean): ReadResult = {
     val selected = if (streams.isEmpty) catalog.streamNames else streams
     cache.preRegisterStreams(selected)
-    // Streams are independent tables, so their syncs run CONCURRENTLY
-    // (bounded pool): each is a tiny scenario write whose wall is
+    // Streams are independent tables, so their syncs run concurrently
+    // through the sync pool: each is a tiny scenario write whose wall is
     // dominated by job-commit latency, and Spark's scheduler interleaves
     // concurrent jobs from different threads. Registration is already
-    // done in bulk above, so the per-stream path touches no shared
-    // cache state. Failures propagate like the sequential loop's.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(8, math.max(1, selected.size)))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    try {
-      val syncs = selected.map { s =>
-        scala.concurrent.Future {
-          delegate(s).read(cache, spark, Seq(s), writeStrategy, forceFullRefresh)
-        }
-      }
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(syncs),
-        scala.concurrent.duration.Duration(10, "min"))
-    } finally pool.shutdown()
+    // done in bulk above. Every stream finishes before a failure
+    // propagates.
+    StreamPool.run(spark, selected) { s =>
+      delegate(s).read(cache, spark, Seq(s), writeStrategy, forceFullRefresh)
+    }
     new ReadResult(cache, selected)
   }
 }

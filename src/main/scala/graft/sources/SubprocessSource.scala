@@ -145,6 +145,22 @@ final class SubprocessSource(
     }
   }
 
+  /** One connector process and its parsed message stream. [[stop]]
+    * kills the process (and anything it spawned) whatever the
+    * iterator's position, and is safe from any thread; [[stopped]] is
+    * true from its first step on, before anything is killed. */
+  private final class ConnectorRun(
+      proc: Process, stopFlag: AtomicBoolean, val messages: Iterator[AirbyteMessage]) {
+    def stopped: Boolean = stopFlag.get
+    def stop(): Unit = {
+      stopFlag.set(true)
+      proc.descendants().forEach(p => { p.destroy(); () })
+      proc.destroy()
+      if (!proc.waitFor(5, java.util.concurrent.TimeUnit.SECONDS))
+        proc.destroyForcibly().waitFor()
+    }
+  }
+
   /** Pull protocol messages from the subprocess, lazily. A connector
     * that EXITS NONZERO fails the read loudly (reference
     * `_executors/base.py` — `AirbyteSubprocessFailedError` with exit
@@ -152,27 +168,36 @@ final class SubprocessSource(
     * is indistinguishable from a clean end-of-stream and partial data
     * would commit silently. Intentional early termination (stop event /
     * record limit) kills the process and is NOT an error. */
-  def messages(limit: Option[Long] = None): Iterator[AirbyteMessage] = {
+  def messages(limit: Option[Long] = None): Iterator[AirbyteMessage] =
+    launch(limit).messages
+
+  private def launch(limit: Option[Long]): ConnectorRun = {
     val pb = new ProcessBuilder(cmd: _*)
     pb.redirectErrorStream(false)
     val proc = pb.start()
     val stderrTail = drainStderr(proc) // also keeps a chatty connector from blocking
     val reader = new java.io.BufferedReader(
       new java.io.InputStreamReader(proc.getInputStream, "UTF-8"))
+    // this run's own stop signal: set by ConnectorRun.stop, next to the
+    // source-wide stop event
+    val stopped = new AtomicBoolean(false)
+    def stopping: Boolean = stopEvent.get || stopped.get
 
     val raw = new Iterator[String] {
       private var nextLine: String = null
       private var done = false
       private def advance(): Unit = {
         if (!done && nextLine == null) {
-          if (stopEvent.get) { // early termination → kill the connector
+          if (stopping) { // early termination → kill the connector
             proc.destroy(); done = true
           } else {
-            nextLine = reader.readLine()
+            nextLine =
+              try reader.readLine()
+              catch { case _: java.io.IOException if stopping => null }
             if (nextLine == null) {
               done = true
               val code = proc.waitFor()
-              if (code != 0 && !stopEvent.get) {
+              if (code != 0 && !stopping) {
                 throw new graft.errors.SubprocessFailedError(
                   name, code, Some(stderrTail()))
               }
@@ -201,7 +226,7 @@ final class SubprocessSource(
         cb(cfg)
       m
     }
-    limit match {
+    new ConnectorRun(proc, stopped, limit match {
       case Some(n) =>
         // islice-equivalent: stop the producer once n records are taken
         var taken = 0L
@@ -212,7 +237,7 @@ final class SubprocessSource(
           go
         }
       case None => parsed
-    }
+    })
   }
 
   /** Record payloads for one stream, chunked into a distributed Dataset. */
@@ -251,11 +276,19 @@ final class SubprocessSource(
    *    `_writers/file_writers.py:33` — driver memory stays bounded);
    *  - STATE → pending, keyed by stream (STREAM type) or `_GLOBAL` /
    *    `_LEGACY` (`sql_processor.py:344-360`), LAST message wins;
-   *  - TRACE stream COMPLETE → finalize that stream now: spilled files +
-   *    tail buffer → normalize → write strategy → THEN write its pending
-   *    state (at-least-once: state lands only after data does, ST2);
-   *  - end of input → finalize remaining streams, then `_GLOBAL` /
-   *    `_LEGACY` states.
+   *  - TRACE stream COMPLETE → the stream's spilled files, tail buffer
+   *    and pending state are handed to a [[StreamPool]] worker, which
+   *    runs normalize → write strategy → THEN the stream's state
+   *    (at-least-once: state lands only after data does, ST2) while
+   *    this loop keeps reading the connector;
+   *  - end of input → finalize remaining streams, wait for every
+   *    finalize, then `_GLOBAL` / `_LEGACY` states.
+   *
+   * A failed finalize stops the connector and the loop; streams whose
+   * COMPLETE had not arrived are not finalized, and the other in-flight
+   * finalizes still run to their end before the first error is
+   * rethrown. Whatever happens, the connector is dead and every
+   * spill file deleted when this returns or throws.
    */
   def sync(
       cache: graft.cache.SparkCache,
@@ -272,6 +305,7 @@ final class SubprocessSource(
     val canonical = selected.map(s =>
       graft.names.NameNormalizer.normalize(s) -> s).toMap
     val spills = mutable.Map.empty[String, mutable.ArrayBuffer[java.nio.file.Path]]
+    val allSpills = mutable.ArrayBuffer.empty[java.nio.file.Path]
     val buffers = mutable.Map.empty[String, mutable.ArrayBuffer[String]]
     val pending = mutable.Map.empty[String, String]
     val finalized = mutable.Set.empty[String]
@@ -279,49 +313,81 @@ final class SubprocessSource(
     def spill(stream: String): Unit = {
       val buf = buffers(stream)
       val f = java.nio.file.Files.createTempFile(s"graft-batch-$stream", ".jsonl")
+      allSpills += f
       java.nio.file.Files.write(f,
         buf.mkString("\n").getBytes("UTF-8"))
       spills.getOrElseUpdate(stream, mutable.ArrayBuffer.empty) += f
       buf.clear()
     }
 
+    val pool = new StreamPool(spark, selected)
+    val run = try launch(None) catch { case t: Throwable => pool.await(); throw t }
+
+    // snapshot on the loop thread; the worker owns the snapshot
     def finalizeStream(stream: String): Unit = if (!finalized(stream)) {
       finalized += stream
-      val files = spills.getOrElse(stream, mutable.ArrayBuffer.empty).toSeq
-      val tail = buffers.getOrElse(stream, mutable.ArrayBuffer.empty).toSeq
-      val jsonl =
-        if (files.isEmpty) spark.createDataset(tail)
-        else {
-          val spilled = spark.read.textFile(files.map(_.toString): _*)
-          if (tail.isEmpty) spilled else spilled.union(spark.createDataset(tail))
+      val files = spills.remove(stream).fold(Seq.empty[java.nio.file.Path])(_.toSeq)
+      val tail = buffers.remove(stream).fold(Seq.empty[String])(_.toSeq)
+      val state = pending.remove(stream)
+      pool.submit(stream) {
+        try {
+          val jsonl =
+            if (files.isEmpty) spark.createDataset(tail)
+            else {
+              val spilled = spark.read.textFile(files.map(_.toString): _*)
+              if (tail.isEmpty) spilled else spilled.union(spark.createDataset(tail))
+            }
+          val normalized = graft.operators.Records.normalize(jsonl, catalog(stream).parseSchema)
+          cache.writeStream(stream, normalized, catalog, writeStrategy)
+          state.foreach(cache.writeState(name, stream, _))
+          files.foreach(java.nio.file.Files.deleteIfExists)
+        } catch {
+          // nothing more will commit: the loop reads `run.stopped`
+          case t: Throwable => run.stop(); throw t
         }
-      val normalized = graft.operators.Records.normalize(jsonl, catalog(stream).parseSchema)
-      cache.writeStream(stream, normalized, catalog, writeStrategy)
-      pending.remove(stream).foreach(cache.writeState(name, stream, _))
-      files.foreach(java.nio.file.Files.deleteIfExists)
+      }
     }
 
-    for (m <- messages()) m.messageType match {
-      case MessageType.RECORD =>
-        m.streamName.flatMap(n => canonical.get(graft.names.NameNormalizer.normalize(n))).foreach { s =>
-          val buf = buffers.getOrElseUpdate(s, mutable.ArrayBuffer.empty)
-          m.dataJson.foreach(buf += _)
-          if (buf.size >= chunkSize) spill(s)
+    var failure: Throwable = null
+    try {
+      val it = run.messages
+      while (!run.stopped && it.hasNext) {
+        val m = it.next()
+        m.messageType match {
+          case MessageType.RECORD =>
+            m.streamName.flatMap(n => canonical.get(graft.names.NameNormalizer.normalize(n))).foreach { s =>
+              val buf = buffers.getOrElseUpdate(s, mutable.ArrayBuffer.empty)
+              m.dataJson.foreach(buf += _)
+              if (buf.size >= chunkSize) spill(s)
+            }
+          case MessageType.STATE =>
+            val key = m.streamName.flatMap(n => canonical.get(graft.names.NameNormalizer.normalize(n)))
+              .getOrElse {
+                // stream-less state: GLOBAL, or LEGACY when typeless
+                val t = m.stateJson.flatMap(AirbyteMessage.stateType)
+                if (t.contains("GLOBAL")) "_GLOBAL" else "_LEGACY"
+              }
+            m.stateJson.foreach(pending(key) = _)
+          case MessageType.TRACE if m.streamStatus.contains("COMPLETE") =>
+            m.streamName.flatMap(n => canonical.get(graft.names.NameNormalizer.normalize(n)))
+              .foreach(finalizeStream)
+          case _ => ()
         }
-      case MessageType.STATE =>
-        val key = m.streamName.flatMap(n => canonical.get(graft.names.NameNormalizer.normalize(n)))
-          .getOrElse {
-            // stream-less state: GLOBAL, or LEGACY when typeless
-            val t = m.stateJson.flatMap(AirbyteMessage.stateType)
-            if (t.contains("GLOBAL")) "_GLOBAL" else "_LEGACY"
-          }
-        m.stateJson.foreach(pending(key) = _)
-      case MessageType.TRACE if m.streamStatus.contains("COMPLETE") =>
-        m.streamName.flatMap(n => canonical.get(graft.names.NameNormalizer.normalize(n)))
-          .foreach(finalizeStream)
-      case _ => ()
+      }
+      // a stopped run ended early: the streams still open are partial
+      if (!run.stopped) selected.foreach(finalizeStream)
+    } catch { case t: Throwable => failure = t }
+    finally {
+      try run.stop()
+      finally
+        try pool.await()
+        catch { case t: Throwable =>
+          if (failure == null) failure = t
+          else if (t ne failure) failure.addSuppressed(t)
+        }
+        finally allSpills.foreach(java.nio.file.Files.deleteIfExists)
     }
-    selected.foreach(finalizeStream)
+    if (failure != null) throw failure
     Seq("_GLOBAL", "_LEGACY").foreach(k =>
       pending.remove(k).foreach(cache.writeState(name, k, _)))
     new ReadResult(cache, selected)

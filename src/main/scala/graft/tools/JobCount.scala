@@ -3,7 +3,7 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 
 /**
  * Round-17 evidence probe: counts the Spark JOBS a query launches
@@ -42,15 +42,15 @@ object JobCount {
         jobs.incrementAndGet()
     })
     def run(n: String): (Int, Double) = {
-      // settle the listener bus so stragglers from the previous query
+      // drain the listener bus so stragglers from the previous query
       // don't leak into this count
-      Thread.sleep(300)
+      GraftBridge.drainListenerBus(spark.sparkContext)
       jobs.set(0)
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(n)(spark, dir)
         .write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
+      GraftBridge.drainListenerBus(spark.sparkContext)
       (jobs.get(), dt)
     }
     names.result().foreach { n =>

@@ -19,6 +19,12 @@ object GraftBridge {
   def longInputTypes(n: Int): Seq[types.AbstractDataType] =
     Seq.fill(n)(types.LongType)
 
+  /** Block until every event posted so far has reached every listener
+    * (the listener bus is `private[spark]`) — how a job-counting
+    * listener settles without sleeping. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /**
    * Distributed Arrow IPC export (reference S11, `caches/base.py:292-322`
    * — chunked `to_arrow`): each partition's rows become self-describing
